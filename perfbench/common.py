@@ -9,7 +9,10 @@ from __future__ import annotations
 
 import json
 import os
+import signal
+import subprocess
 import sys
+import time
 from pathlib import Path
 
 BENCH = Path(__file__).resolve().parent
@@ -77,3 +80,88 @@ def start_spark(app: str, event_dir: str | None = None):
     spark = get_spark(app, cpus=cpus(), extra_conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def adopt_orphans() -> None:
+    """Make this process the reaper of its orphaned descendants (Linux
+    ``PR_SET_CHILD_SUBREAPER``): the JVM's ``pyspark.daemon`` workers and a
+    generator child's JVM then stay this process's children when their
+    parents exit, so ``end_processes`` can wait for every one of them."""
+    import ctypes
+
+    try:
+        ctypes.CDLL(None, use_errno=True).prctl(36, 1, 0, 0, 0)
+    except (OSError, AttributeError):
+        pass
+
+
+def _children() -> list[int]:
+    me, kids = os.getpid(), []
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        if int(fields[1]) == me:
+            kids.append(int(name))
+    return kids
+
+
+def end_processes(grace: float = 60.0) -> None:
+    """Stop Spark, end the driver JVM and wait until every process this
+    one started, directly or not, has exited; what is still running after
+    ``grace`` seconds is terminated, then killed."""
+    try:
+        from pyspark import SparkContext
+    except ImportError:
+        SparkContext = None
+    if SparkContext is not None:
+        if SparkContext._active_spark_context is not None:
+            try:
+                SparkContext._active_spark_context.stop()
+            except Exception:  # a broken context must not keep the JVM alive
+                pass
+        gateway = SparkContext._gateway
+        if gateway is not None:
+            proc = getattr(gateway, "proc", None)
+            try:
+                gateway.shutdown()
+            except Exception:
+                pass
+            if proc is not None:
+                # the JVM exits when its stdin reaches EOF
+                if proc.stdin is not None:
+                    proc.stdin.close()
+                try:
+                    proc.wait(grace)
+                except subprocess.TimeoutExpired:
+                    proc.kill()
+                    proc.wait()
+            SparkContext._gateway = None
+            SparkContext._jvm = None
+    deadline = time.monotonic() + grace
+    sig = None
+    while True:
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        except ChildProcessError:
+            pass
+        kids = _children()
+        if not kids:
+            return
+        now = time.monotonic()
+        if now > deadline + 10:
+            sig = signal.SIGKILL
+        elif now > deadline:
+            sig = signal.SIGTERM
+        if sig is not None:
+            for pid in kids:
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+        time.sleep(0.05)

@@ -353,14 +353,15 @@ def main() -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     args = ap.parse_args()
-    from common import prepare_env, start_spark
+    from common import adopt_orphans, end_processes, prepare_env, start_spark
 
+    adopt_orphans()
     prepare_env()
-    spark = start_spark("perfbench-gen")
     try:
-        print(json.dumps(workload_inputs(spark, args.workload, args.seed)))
+        spark = start_spark("perfbench-gen")
+        print(json.dumps(workload_inputs(spark, args.workload, args.seed)), flush=True)
     finally:
-        spark.stop()
+        end_processes()
     return 0
 
 

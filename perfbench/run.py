@@ -32,13 +32,17 @@ import argparse
 import gc
 import json
 import os
+import signal
 import statistics
 import subprocess
 import sys
 import time
 import traceback
 
-from common import BENCH, ROOT, SPEC, WORKLOADS, cpus, package_present, prepare_env
+from common import (
+    BENCH, ROOT, SPEC, WORKLOADS, adopt_orphans, cpus, end_processes, package_present,
+    prepare_env,
+)
 
 HISTORY = BENCH / "history.jsonl"
 MIN_OPS = 2
@@ -236,4 +240,11 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    # a terminated run still ends its JVM and workers on the way out
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    adopt_orphans()
+    try:
+        code = main()
+    finally:
+        end_processes()
+    sys.exit(code)

@@ -13,7 +13,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from common import WORK, prepare_env, start_spark  # noqa: E402
+from common import WORK, end_processes, prepare_env, start_spark  # noqa: E402
 
 import gen  # noqa: E402
 
@@ -23,7 +23,7 @@ def spark():
     prepare_env()
     spark = start_spark("perfbench-test")
     yield spark
-    spark.stop()
+    end_processes()
 
 
 @pytest.fixture
