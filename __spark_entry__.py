@@ -1292,6 +1292,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pyspark.sql import functions as F
 
         from esmarc_spark.ops.kg_negatives import negative_samples
+        from esmarc_spark.pipeline.materialize import entity_id_col
 
         m = kg_documents.doc_mentions(_t(spark, sf, "documents"))
         pos = m.select(
@@ -1299,10 +1300,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "subj"
             ),
             F.lit("mentions").alias("pred"),
-            F.concat(
-                F.lit(kg_documents.TARGET), "entity_type", F.lit("/"),
-                "authority_id",
-            ).alias("obj"),
+            entity_id_col().alias("obj"),
         )
         return negative_samples(pos, k=2).orderBy(
             "subj", "pred", "obj", "neg_idx"
@@ -2501,6 +2499,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    from esmarc_spark.lookups.dims import TARGET_ID
     from esmarc_spark.ops import asof, dedup, kg_documents, relational, text
     from esmarc_spark.ops.similarity import (
         EMBEDDING_NEAR_DUPS_SQL_TEMPLATE,
@@ -3147,7 +3146,7 @@ FROM reach GROUP BY node ORDER BY uri
         ).negative_samples_sql(
             "SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS subj, "
             "'mentions' AS pred, "
-            f"'{kg_documents.TARGET}' || entity_type || '/' || authority_id "
+            f"'{TARGET_ID}' || entity_type || '/' || authority_id "
             f"AS obj FROM ({kg_documents.DOC_MENTIONS_SQL})",
             2,
         )

@@ -19,7 +19,8 @@ DuckDB over the generator-vendored expected parse
 scripts/gen_realcrawl_fixture.py from what it put INTO the WARC, never
 by the reader under test): canonical-url dedup via the urlnorm SQL
 chain, main-content extraction via the boilerplate SQL, the language
-vote via the stopword SQL, and the same five triple shapes.
+vote via the stopword SQL, and the page/entity shapes of
+pipeline.materialize's shape table (no isBasedOn; GND sameAs).
 """
 
 from __future__ import annotations
@@ -27,15 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from esmarc_spark.lookups.dims import TARGET_ID
 from esmarc_spark.ops import text
 from esmarc_spark.ops.kg_documents import (
     GND,
-    TARGET,
     _CLASS_CASE,
-    _SCHEMA_CLASS,
     doc_gazetteer,
     gazetteer_values_sql,
+    gnd_same_as,
 )
+from esmarc_spark.pipeline.materialize import _emit_triples
 
 ALLOWED_LANGS = ("en", "de")
 MIN_TOKENS = 8
@@ -68,43 +70,7 @@ def crawl_pipeline(spark: SparkSession, warc_path: str) -> DataFrame:
     m = kept.select(
         "url", F.explode(F.split("text", " ")).alias("surface_form")
     ).join(F.broadcast(gaz), "surface_form")
-    m = m.localCheckpoint(eager=False)
-
-    entity = F.concat(F.lit(TARGET), "entity_type", F.lit("/"), "authority_id")
-    schema_map = F.create_map(
-        *[F.lit(x) for kv in _SCHEMA_CLASS.items() for x in kv]
-    )
-    page_type = m.select("url").distinct().select(
-        F.col("url").alias("subj"),
-        F.lit("@type").alias("pred"),
-        F.lit("http://schema.org/CreativeWork").alias("obj"),
-    )
-    page_mentions = m.select(
-        F.col("url").alias("subj"),
-        F.lit("mentions").alias("pred"),
-        entity.alias("obj"),
-    ).distinct()
-    ents = m.groupBy("entity_type", "authority_id").agg(
-        F.min("surface_form").alias("pname")
-    )
-    e_type = ents.select(
-        entity.alias("subj"), F.lit("@type").alias("pred"),
-        schema_map[F.col("entity_type")].alias("obj"),
-    )
-    e_same = ents.select(
-        entity.alias("subj"), F.lit("sameAs").alias("pred"),
-        F.concat(F.lit(GND), F.col("authority_id")).alias("obj"),
-    )
-    e_name = ents.select(
-        entity.alias("subj"), F.lit("preferredName").alias("pred"),
-        F.col("pname").alias("obj"),
-    )
-    return (
-        page_type.unionAll(page_mentions)
-        .unionAll(e_type).unionAll(e_same).unionAll(e_name)
-        .distinct()
-        .orderBy("subj", "pred", "obj")
-    )
+    return _emit_triples(m, same_as=gnd_same_as()).orderBy("subj", "pred", "obj")
 
 
 def crawl_pipeline_sql(expected_ldj: str) -> str:
@@ -156,15 +122,15 @@ SELECT DISTINCT subj, pred, obj FROM (
          'http://schema.org/CreativeWork' AS obj FROM m
   UNION ALL
   SELECT DISTINCT url, 'mentions',
-         '{TARGET}' || entity_type || '/' || authority_id FROM m
+         '{TARGET_ID}' || entity_type || '/' || authority_id FROM m
   UNION ALL
-  SELECT '{TARGET}' || entity_type || '/' || authority_id,
+  SELECT '{TARGET_ID}' || entity_type || '/' || authority_id,
          '@type', CASE entity_type {_CLASS_CASE} END FROM ents
   UNION ALL
-  SELECT '{TARGET}' || entity_type || '/' || authority_id,
+  SELECT '{TARGET_ID}' || entity_type || '/' || authority_id,
          'sameAs', '{GND}' || authority_id FROM ents
   UNION ALL
-  SELECT '{TARGET}' || entity_type || '/' || authority_id,
+  SELECT '{TARGET_ID}' || entity_type || '/' || authority_id,
          'preferredName', pname FROM ents
 ) ORDER BY subj, pred, obj
 """

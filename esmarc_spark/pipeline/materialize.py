@@ -1,19 +1,26 @@
-"""S5 — materialize (subj, pred, obj) JSON-LD triples from linked mentions.
+"""S5 — the one triple emitter: (subj, pred, obj) JSON-LD triples from
+linked mention rows.
 
 Emitted graph (reference-parity vocabulary — mentions / sameAs / @type /
-preferredName, cf. /root/reference/esmarc/esmarc.py:39-237 + id.py:40-50):
+preferredName / isBasedOn, cf. the reference's esmarc.py and id.py):
 
-  page node   subj = url
-      (url, "@type", "http://schema.org/CreativeWork")
-      (url, "mentions", <entity @id>)            one per detected mention
-      (url, "isBasedOn", <source partition uri>) provenance
+  page node   subj = url, or doc://<doc_id> over the documents table
+      (page, "@type", "http://schema.org/CreativeWork")
+      (page, "mentions", <entity @id>)            one per distinct (page, entity)
+      (page, "isBasedOn", <source partition uri>) provenance, when a source is given
   entity node subj = minted "{TARGET_ID}{entity_type}/{authority_id}"
       (entity, "@type", schema.org class)
-      (entity, "sameAs", canonical authority URI) the linking edge
+      (entity, "sameAs", authority URI)           the linking edge
       (entity, "preferredName", deterministic min surface form)
 
-All shapes are pure DataFrame expressions; the only aggregation
-(preferredName) is a min() — skew-immune partial agg.
+``shape_table`` states these shapes once. ``_emit_triples`` serves every
+batch caller — ``linked_to_triples`` (run_pipeline and the per-day loop),
+the one-job backfill (``run._folded_docs_to_triples``), ``doc_triples``
+and ``crawl_pipeline`` — which differ only in grouping keys, page key and
+subject, isBasedOn source and sameAs object. The streaming page triples
+(``streaming._docs_to_page_triples``) read their two stateless shapes
+from the same table. The only aggregation is a min() — skew-immune
+partial agg.
 """
 
 from __future__ import annotations
@@ -23,9 +30,7 @@ from pyspark.sql import functions as F
 
 from esmarc_spark.lookups.dims import TARGET_ID
 
-TRIPLE_SCHEMA = "subj string, pred string, obj string"
-
-_SCHEMA_CLASS = {
+SCHEMA_CLASS = {
     "persons": "http://schema.org/Person",
     "organizations": "http://schema.org/Organization",
     "geo": "http://schema.org/Place",
@@ -42,13 +47,41 @@ def entity_id_col() -> F.Column:
     )
 
 
+def shape_table(
+    subj: F.Column, source: F.Column | None, same_as: F.Column
+) -> dict[tuple[str, str], F.Column]:
+    """(grain, pred) -> obj for every shape the engine emits. A grain is
+    the relation a shape is read from: ``page`` (one row per page),
+    ``pair`` (one row per (page, entity)) or ``entity`` (one row per
+    entity, carrying the min surface as ``_name``). ``subj`` is the page
+    subject; ``source`` the isBasedOn partition (None: no provenance
+    shape); ``same_as`` the sameAs object over the entity columns."""
+    table = {("page", "@type"): F.lit("http://schema.org/CreativeWork")}
+    if source is not None:
+        table["page", "isBasedOn"] = F.concat(
+            F.lit(f"{TARGET_ID}source/"), source, F.lit("/"), subj
+        )
+    classes = F.create_map(*[F.lit(x) for kv in SCHEMA_CLASS.items() for x in kv])
+    table["pair", "mentions"] = entity_id_col()
+    table["entity", "@type"] = classes[F.col("entity_type")]
+    table["entity", "sameAs"] = same_as
+    table["entity", "preferredName"] = F.col("_name")
+    return table
+
+
 def _fan_out(
     rel: DataFrame, subj: F.Column, shapes: list[tuple], keys: tuple = ()
 ) -> DataFrame:
     """Scan an aggregated relation ONCE and fan its triple shapes out via
     an in-row explode — per-shape selects would re-run the distinct /
     groupBy shuffle once per shape (measured: 6 scans + 5 shuffles for
-    the same triple set). ``keys`` rides extra partition columns through."""
+    the same triple set); a single shape is a plain select. ``keys``
+    rides extra partition columns through."""
+    if len(shapes) == 1:
+        ((pred, obj),) = shapes
+        return rel.select(
+            *keys, subj.alias("subj"), F.lit(pred).alias("pred"), obj.alias("obj")
+        )
     po = F.explode(
         F.array(
             *[
@@ -62,133 +95,67 @@ def _fan_out(
     )
 
 
-def _schema_class_map() -> F.Column:
-    return F.create_map(*[F.lit(x) for kv in _SCHEMA_CLASS.items() for x in kv])
+def _emit_triples(
+    mentions: DataFrame,
+    keys: tuple[str, ...] = (),
+    page: str = "url",
+    subj: F.Column | None = None,
+    source: F.Column | None = None,
+    same_as: F.Column | None = None,
+) -> DataFrame:
+    """Mention rows -> the full triple set, columns (*keys, subj, pred,
+    obj). ``keys`` are extra grouping keys (the backfill's ``pday``), so
+    the output is, per key value, the triple set of that slice alone.
+    ``page`` is the page key and ``subj`` its subject (default: the key
+    itself; computing it after the aggregate keeps a long page key as
+    the shuffle key). ``same_as`` defaults to the linker's
+    ``canonical_url``, which then rides the entity grouping keys — it is
+    functionally dependent on (entity_type, authority_id).
+
+    One partial-agg pass collapses the mention rows to the distinct
+    (keys, page, entity) relation, carrying the per-pair min surface so
+    the entity aggregate derives from it without a second pass (min of
+    per-page mins == global min), and the lazy localCheckpoint
+    materializes THAT small relation once for its three consumers.
+
+    No outer distinct: every grain is internally distinct (pages come out
+    of a distinct, the pair grain IS the groupBy's output grain, entities
+    come out of a groupBy) and shapes cannot collide across grains
+    (mentions is pair-only; page and entity rows split on their subject,
+    a page url or doc:// id vs a minted TARGET_ID entity id) — a global
+    distinct would shuffle every triple for nothing, which at 10^12 docs
+    is the single biggest avoidable shuffle. tests/test_triple_emitter.py
+    pins this for every caller."""
+    subj = F.col(page) if subj is None else subj
+    entity = ("entity_type", "authority_id")
+    if same_as is None:
+        entity += ("canonical_url",)
+        same_as = F.col("canonical_url")
+    pairs = (
+        mentions.groupBy(*keys, page, *entity)
+        .agg(F.min("surface_form").alias("_s"))
+        .localCheckpoint(eager=False)
+    )
+    grains = {
+        "page": (pairs.select(*keys, page).distinct(), subj),
+        "pair": (pairs, subj),
+        "entity": (
+            pairs.groupBy(*keys, *entity).agg(F.min("_s").alias("_name")),
+            entity_id_col(),
+        ),
+    }
+    table = shape_table(subj, source, same_as)
+    page_rows, pair_rows, entity_rows = (
+        _fan_out(rel, s, [(p, o) for (g, p), o in table.items() if g == grain], keys)
+        for grain, (rel, s) in grains.items()
+    )
+    return page_rows.unionAll(pair_rows).unionAll(entity_rows)
 
 
 def linked_to_triples(linked: DataFrame, source_index: str = "webtext") -> DataFrame:
-    """Linked mention rows -> the full triple set (union of typed shapes).
-
-    One partial-agg pass collapses the linked mention rows to the
-    distinct (url, entity) relation — carrying the per-pair min surface
-    so the entity aggregate derives from it without a second pass (min
-    of per-url mins == global min) — and the lazy localCheckpoint
-    materializes THAT small relation once for the three consumers.  The
-    round-7 shape checkpointed the full linked set (all 7 columns, one
-    row per mention occurrence) and re-shuffled it three times: a url
-    distinct, a (url, entity) distinct, and the entity groupBy.  The
-    mention shape now needs no distinct at all (the groupBy keys are
-    exactly its output grain; canonical_url is functionally dependent on
-    (entity_type, authority_id) — the same dependency the round-4 "no
-    outer distinct" argument below already relies on).  Batch-only
-    caller — streaming builds its shapes directly in
-    streaming.stream_page_triples."""
-    pairs = (
-        linked.groupBy("url", "entity_type", "authority_id", "canonical_url")
-        .agg(F.min("surface_form").alias("_s"))
-        .localCheckpoint(eager=False)
-    )
-    entity_id = entity_id_col()
-
-    page_shapes = _fan_out(
-        pairs.select("url").distinct(),
-        F.col("url"),
-        [
-            ("@type", F.lit("http://schema.org/CreativeWork")),
-            (
-                "isBasedOn",
-                F.concat(F.lit(f"{TARGET_ID}source/{source_index}/"), F.col("url")),
-            ),
-        ],
-    )
-    page_mentions = pairs.select(
-        F.col("url").alias("subj"),
-        F.lit("mentions").alias("pred"),
-        entity_id.alias("obj"),
-    )
-    entity_shapes = _fan_out(
-        pairs.groupBy("entity_type", "authority_id", "canonical_url").agg(
-            F.min("_s").alias("preferred_name")
-        ),
-        entity_id,
-        [
-            ("@type", _schema_class_map()[F.col("entity_type")]),
-            ("sameAs", F.col("canonical_url")),
-            ("preferredName", F.col("preferred_name")),
-        ],
-    )
-
-    # no outer distinct: every shape is internally distinct (pages are
-    # unique, page_mentions deduped, entity shapes come out of a groupBy)
-    # and the shapes can't collide across the union (disjoint pred/subj
-    # combinations) — a global distinct here would shuffle every triple for
-    # nothing, which at 10^12 docs is the single biggest avoidable shuffle.
-    return page_shapes.unionAll(page_mentions).unionAll(entity_shapes)
-
-
-def linked_to_triples_partitioned(linked: DataFrame) -> DataFrame:
-    """Per-day triple emission for the single-job backfill (round 5 —
-    VERDICT r4 #3): ``linked`` carries a ``pday`` column, and every
-    aggregation/distinct is additionally keyed by it, so the output is
-    byte-identical, day by day, to running ``linked_to_triples(part,
-    source_index=pday)`` once per day — but as ONE Spark job over all
-    pending days instead of a serialized driver loop. Output columns:
-    (pday, subj, pred, obj).
-
-    Scale note: pday joins every shuffle key, so a hot day cannot
-    collapse the backfill into one reducer any worse than the per-day
-    loop could — and AQE still splits skewed (pday, entity) buckets.
-
-    Same one-pass collapse as ``linked_to_triples`` (round 8): the
-    checkpoint holds the small (pday, url, entity) aggregate, not the
-    full per-occurrence linked set, and the mention shape needs no
-    distinct (the groupBy grain IS its output grain)."""
-    pairs = (
-        linked.groupBy(
-            "pday", "url", "entity_type", "authority_id", "canonical_url"
-        )
-        .agg(F.min("surface_form").alias("_s"))
-        .localCheckpoint(eager=False)
-    )
-    entity_id = entity_id_col()
-    keys = ("pday",)
-
-    page_shapes = _fan_out(
-        pairs.select("pday", "url").distinct(),
-        F.col("url"),
-        [
-            ("@type", F.lit("http://schema.org/CreativeWork")),
-            (
-                "isBasedOn",
-                F.concat(
-                    F.lit(f"{TARGET_ID}source/"),
-                    F.col("pday"),
-                    F.lit("/"),
-                    F.col("url"),
-                ),
-            ),
-        ],
-        keys=keys,
-    )
-    page_mentions = pairs.select(
-        F.col("pday"),
-        F.col("url").alias("subj"),
-        F.lit("mentions").alias("pred"),
-        entity_id.alias("obj"),
-    )
-    entity_shapes = _fan_out(
-        pairs.groupBy("pday", "entity_type", "authority_id", "canonical_url").agg(
-            F.min("_s").alias("preferred_name")
-        ),
-        entity_id,
-        [
-            ("@type", _schema_class_map()[F.col("entity_type")]),
-            ("sameAs", F.col("canonical_url")),
-            ("preferredName", F.col("preferred_name")),
-        ],
-        keys=keys,
-    )
-    return page_shapes.unionAll(page_mentions).unionAll(entity_shapes)
+    """Linked mention rows -> the full triple set, with isBasedOn
+    provenance under ``source_index``."""
+    return _emit_triples(linked, source=F.lit(source_index))
 
 
 def sink_triples(

@@ -69,9 +69,9 @@ def detect_mentions(webtext: DataFrame, surface_forms: list[str]) -> DataFrame:
     the JVM for cores (round-1 measurement — throughput DROPPED going
     8->32 local threads). It exists only for exact char-offset /
     word-boundary semantics (punctuation-adjacent matches) that the
-    token n-gram join cannot express; ``run_pipeline`` defaults to the
-    JVM join path (mentions_mode="ngram") and nobody should flip
-    ``mentions_mode="regex"`` at corpus scale expecting parity.
+    token n-gram join cannot express. The pipeline always runs the JVM
+    join path (``detect_mentions_ngram``); this scan serves as a parity
+    reference in the tests.
 
     The gazetteer ships as a SparkContext broadcast variable (torrent
     distribution, once per executor) rather than a closure capture that

@@ -17,15 +17,8 @@ from pyspark.errors import AnalysisException
 from esmarc_spark.pipeline.canonicalize import canonical_mapping, rewrite_through_canonical
 from esmarc_spark.pipeline.extract_text import dedup_by_url, with_extracted_text
 from esmarc_spark.pipeline.link import link_mentions
-from esmarc_spark.pipeline.materialize import (
-    linked_to_triples,
-    linked_to_triples_partitioned,
-)
-from esmarc_spark.pipeline.mentions import (
-    detect_mentions,
-    detect_mentions_ngram,
-    detect_mentions_tokenized,
-)
+from esmarc_spark.pipeline.materialize import _emit_triples, linked_to_triples
+from esmarc_spark.pipeline.mentions import detect_mentions_ngram
 from esmarc_spark.pipeline.checkpoint import CheckpointStore
 
 
@@ -281,7 +274,6 @@ def run_pipeline(
     gazetteer: DataFrame,
     same_as_edges: DataFrame | None = None,
     canonical_map: DataFrame | None = None,
-    mentions_mode: str = "ngram",
     source_index: str = "webtext",
     canonical_url_dedup: bool = False,
     percent_normalize: bool = False,
@@ -304,11 +296,6 @@ def run_pipeline(
 ) -> DataFrame:
     """S1 extract -> dedup -> S2 mentions -> S3 link -> (S4 canonicalize)
     -> S5 triples. Returns the triples DataFrame (lazy).
-
-    mentions_mode: "ngram" (default — JVM-only token n-gram join, the hot
-    path that scales), "regex" (pandas-UDF char-offset scan; exact
-    word-boundary semantics incl. punctuation-adjacent matches), or "token"
-    (single-token JVM join).
 
     Pass ``canonical_map`` (precomputed uri->canonical dim) when calling in
     a loop — recomputing connected components per partition would repeat the
@@ -375,19 +362,24 @@ def run_pipeline(
         badword_list=badword_list,
         pii_scrub=pii_scrub,
     )
-    if mentions_mode == "ngram":
-        mentions = detect_mentions_ngram(docs, gazetteer)
-    elif mentions_mode == "token":
-        mentions = detect_mentions_tokenized(docs, gazetteer)
-    else:
-        surfaces = [r["surface_form"] for r in gazetteer.select("surface_form").distinct().collect()]
-        mentions = detect_mentions(docs, surfaces)
-    linked = link_mentions(mentions, gazetteer)
     if canonical_map is None and same_as_edges is not None:
         canonical_map = canonical_mapping(same_as_edges)
+    return linked_to_triples(
+        link_docs(docs, gazetteer, canonical_map), source_index=source_index
+    )
+
+
+def link_docs(
+    docs: DataFrame, gazetteer: DataFrame, canonical_map: DataFrame | None = None
+) -> DataFrame:
+    """S2 mentions -> S3 link -> optional S4 rewrite through the
+    canonical map: curated docs in, linked mention rows out. The one
+    S2-S4 step of the batch pipeline, the backfill and the streaming
+    page triples."""
+    linked = link_mentions(detect_mentions_ngram(docs, gazetteer), gazetteer)
     if canonical_map is not None:
         linked = rewrite_through_canonical(linked, canonical_map, "canonical_url")
-    return linked_to_triples(linked, source_index=source_index)
+    return linked
 
 
 def _curated_day_docs(
@@ -457,16 +449,18 @@ def _curated_day_docs(
 def _folded_docs_to_triples(
     docs: DataFrame, gazetteer: DataFrame, canonical_map: DataFrame | None
 ) -> DataFrame:
-    """S2-S5 over folded-url docs; splits pday back out for the
-    partitioned triple emission."""
-    mentions = detect_mentions_ngram(docs, gazetteer)
-    linked = link_mentions(mentions, gazetteer)
-    if canonical_map is not None:
-        linked = rewrite_through_canonical(linked, canonical_map, "canonical_url")
+    """S2-S5 over folded-url docs; splits pday back out and emits with
+    every aggregate keyed by it, so the output (pday, subj, pred, obj) is
+    byte-identical, day by day, to ``run_pipeline(part,
+    source_index=pday)`` once per day — but as ONE Spark job. pday joins
+    every shuffle key, so a hot day cannot collapse the backfill into one
+    reducer any worse than the per-day loop could, and AQE still splits
+    skewed (pday, entity) buckets."""
+    linked = link_docs(docs, gazetteer, canonical_map)
     linked = linked.withColumn("pday", F.substring("url", 1, 10)).withColumn(
         "url", F.expr("substring(url, 11)")
     )
-    return linked_to_triples_partitioned(linked)
+    return _emit_triples(linked, keys=("pday",), source=F.col("pday"))
 
 
 def _corpus_dedup_apply(

@@ -20,9 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esmarc_spark.lookups.dims import TARGET_ID
 from esmarc_spark.pipeline.extract_text import with_extracted_text
-from esmarc_spark.pipeline.link import link_mentions
+from esmarc_spark.pipeline.materialize import shape_table
 from esmarc_spark.pipeline.mentions import detect_mentions_ngram
 
 WEBTEXT_SCHEMA = (
@@ -60,22 +59,24 @@ def page_triples(
 def _docs_to_page_triples(
     docs: DataFrame, gazetteer: DataFrame, source_index: str
 ) -> DataFrame:
-    mentions = detect_mentions_ngram(docs, gazetteer)
-    linked = link_mentions(mentions, gazetteer)
-    entity_id = F.concat(
-        F.lit(TARGET_ID), F.col("entity_type"), F.lit("/"), F.col("authority_id")
+    """The page-level mentions/isBasedOn shapes of materialize's shape
+    table, stateless: append mode allows no aggregation, so mentions stay
+    one row per linked mention and isBasedOn one row per url."""
+    from esmarc_spark.pipeline.run import link_docs
+
+    linked = link_docs(docs, gazetteer)
+    url = F.col("url")
+    shapes = shape_table(url, F.lit(source_index), F.col("canonical_url"))
+
+    def shape(rel: DataFrame, grain: str, pred: str) -> DataFrame:
+        return rel.select(
+            url.alias("subj"), F.lit(pred).alias("pred"),
+            shapes[grain, pred].alias("obj"),
+        )
+
+    return shape(linked, "pair", "mentions").unionByName(
+        shape(linked.select("url").dropDuplicates(["url"]), "page", "isBasedOn")
     )
-    page_mentions = linked.select(
-        F.col("url").alias("subj"),
-        F.lit("mentions").alias("pred"),
-        entity_id.alias("obj"),
-    )
-    page_prov = linked.select("url").dropDuplicates(["url"]).select(
-        F.col("url").alias("subj"),
-        F.lit("isBasedOn").alias("pred"),
-        F.concat(F.lit(f"{TARGET_ID}source/{source_index}/"), F.col("url")).alias("obj"),
-    )
-    return page_mentions.unionByName(page_prov)
 
 
 def stream_page_triples(

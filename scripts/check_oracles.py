@@ -2,6 +2,10 @@
 __spark_entry__.queries() entry and its oracle_sql() through DuckDB at the
 given sf dir, compare row count, column names, and order-insensitive values.
 
+A query that raises is reported as errored and the run goes on; the
+summary line counts checked / ok / failed / errored queries and the exit
+status is non-zero if any query failed or errored.
+
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 """
 
@@ -10,6 +14,7 @@ from __future__ import annotations
 import math
 import sys
 import time
+import traceback
 from pathlib import Path
 
 import duckdb
@@ -51,49 +56,65 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = []
+    checked, failed, errored = 0, [], []
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
-        sdf = fn(spark, sf_dir)
-        s_cols = sdf.columns
-        s_rows = [tuple(r) for r in sdf.collect()]
-        spark_sec = time.time() - t0
-        if name not in oracles:
-            print(f"  {name:24s} rows-only: {len(s_rows)} rows  ({spark_sec:.1f}s)")
-            if not s_rows:
-                failures.append((name, "empty result"))
+        checked += 1
+        try:
+            problems = check_query(spark, con, name, fn, oracles.get(name), sf_dir)
+        except Exception as exc:  # one broken query must not hide the rest
+            print(f"  {name:24s} ERROR {type(exc).__name__}: {str(exc)[:200]}")
+            traceback.print_exc(limit=-2, file=sys.stdout)
+            errored.append(name)
             continue
-        t0 = time.time()
-        rel = con.sql(oracles[name])
-        d_cols = [c.lower() for c in rel.columns]
-        d_rows = rel.fetchall()
-        duck_sec = time.time() - t0
-        problems = []
-        if [c.lower() for c in s_cols] != d_cols:
-            problems.append(f"columns {s_cols} != {d_cols}")
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount {len(s_rows)} != {len(d_rows)}")
-        a = canon_rows(s_cols, s_rows)
-        b = canon_rows(d_cols, d_rows)
-        if a != b:
-            diff_a = [r for r in a if r not in set(b)][:3]
-            diff_b = [r for r in b if r not in set(a)][:3]
-            problems.append(f"values differ; spark-only={diff_a} duck-only={diff_b}")
-        status = "OK " if not problems else "FAIL"
-        print(
-            f"  {name:24s} {status} rows={len(s_rows)} spark={spark_sec:.1f}s duck={duck_sec:.1f}s"
-        )
         for p in problems:
             print(f"      {p}")
-            failures.append((name, p))
+        if problems:
+            failed.append(name)
     spark.stop()
-    if failures:
-        print(f"\n{len(failures)} failure(s)")
-        return 1
-    print("\nall queries match")
-    return 0
+    ok = checked - len(failed) - len(errored)
+    print(
+        f"\nchecked={checked} ok={ok} failed={len(failed)} errored={len(errored)}"
+    )
+    if failed:
+        print(f"failed: {' '.join(failed)}")
+    if errored:
+        print(f"errored: {' '.join(errored)}")
+    return 1 if failed or errored else 0
+
+
+def check_query(spark, con, name, fn, oracle, sf_dir) -> list[str]:
+    """Run one query and its oracle; return the problems found."""
+    t0 = time.time()
+    sdf = fn(spark, sf_dir)
+    s_cols = sdf.columns
+    s_rows = [tuple(r) for r in sdf.collect()]
+    spark_sec = time.time() - t0
+    if oracle is None:
+        print(f"  {name:24s} rows-only: {len(s_rows)} rows  ({spark_sec:.1f}s)")
+        return [] if s_rows else ["empty result"]
+    t0 = time.time()
+    rel = con.sql(oracle)
+    d_cols = [c.lower() for c in rel.columns]
+    d_rows = rel.fetchall()
+    duck_sec = time.time() - t0
+    problems = []
+    if [c.lower() for c in s_cols] != d_cols:
+        problems.append(f"columns {s_cols} != {d_cols}")
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount {len(s_rows)} != {len(d_rows)}")
+    a = canon_rows(s_cols, s_rows)
+    b = canon_rows(d_cols, d_rows)
+    if a != b:
+        diff_a = [r for r in a if r not in set(b)][:3]
+        diff_b = [r for r in b if r not in set(a)][:3]
+        problems.append(f"values differ; spark-only={diff_a} duck-only={diff_b}")
+    status = "OK " if not problems else "FAIL"
+    print(
+        f"  {name:24s} {status} rows={len(s_rows)} spark={spark_sec:.1f}s duck={duck_sec:.1f}s"
+    )
+    return problems
 
 
 if __name__ == "__main__":
