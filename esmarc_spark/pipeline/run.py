@@ -14,7 +14,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
-from esmarc_spark.pipeline.canonicalize import canonical_mapping, rewrite_through_canonical
+from esmarc_spark.pipeline import fsio
+from esmarc_spark.pipeline.canonicalize import (
+    canonical_mapping,
+    rewrite_through_canonical,
+    stored_canonical_mapping,
+)
 from esmarc_spark.pipeline.extract_text import dedup_by_url, with_extracted_text
 from esmarc_spark.pipeline.link import link_mentions
 from esmarc_spark.pipeline.materialize import _emit_triples, linked_to_triples
@@ -663,6 +668,13 @@ def run_incremental(
     (implies the loop path — the injection point is between partitions).
     Returns a lineage summary dict.
 
+    ``out_root`` holds ``triples/`` (pday-partitioned), ``checkpoints/``
+    (the lineage table) and, with ``same_as_edges``, ``canonical/`` —
+    the stored uri -> canonical map of the last sameAs graph
+    (``canonicalize.stored_canonical_mapping``). S4 runs only when a day
+    is pending, and its connected components only when the graph's
+    fingerprint differs from the stored one.
+
     ``curation`` (round 6) forwards prepare_docs flags — the loop path
     hands them to ``run_pipeline`` verbatim; the batch path applies the
     same gates with per-day grouping (see ``_backfill_one_job``), so
@@ -685,17 +697,19 @@ def run_incremental(
     run_id = uuid.uuid4().hex[:12]
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    canonical_map = None
-    if same_as_edges is not None:
-        # CC once for the whole run, not once per partition; the mapping dim
-        # is small (∝ linked-entity count) so cache + broadcast downstream.
-        canonical_map = canonical_mapping(same_as_edges).cache()
-        canonical_map.count()
-
     partitioned = webtext.withColumn("pday", F.date_format("warc_ts", "yyyy-MM-dd"))
     all_days = [r["pday"] for r in partitioned.select("pday").distinct().collect()]
     done = {r["pday"] for r in store.completed_partitions().collect()}
     pending = sorted(set(all_days) - done)
+
+    canonical_map = None
+    if same_as_edges is not None and pending:
+        # S4 once per sameAs graph, not once per call or partition: the
+        # map is stored under out_root and reused while the graph is
+        # unchanged; a lazy parquet read, so nothing stays cached
+        canonical_map = stored_canonical_mapping(
+            same_as_edges, fsio.join(out_root, "canonical")
+        )
 
     use_batch = mode == "batch" or (
         mode == "auto" and fail_after_partitions is None and len(pending) > 1

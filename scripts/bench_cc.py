@@ -1,8 +1,8 @@
 """Connected-components benchmark: old round-1 action cadence (eager
 checkpoint every 3 rounds, convergence checksum EVERY round — each
 checksum re-executes the un-checkpointed lineage as a second job) vs the
-round-2 cadence (checkpoint+checksum fused every 2 rounds, off-rounds run
-zero actions). Same synthetic edge set, fresh session per variant.
+current cadence (eager checkpoint every round, then the star-form test on
+the cached round). Same synthetic edge set, fresh session per variant.
 
 Usage: python scripts/bench_cc.py [n_edges] [cpus]
 """
@@ -40,6 +40,16 @@ e = (
 e.write.mode("overwrite").parquet(f"/tmp/cc_edges_{{n_edges}}")
 edges = spark.read.parquet(f"/tmp/cc_edges_{{n_edges}}")
 
+def checksum(e):
+    # the round-1 convergence test: (edge count, order-independent hash)
+    row = e.agg(
+        F.count("*").alias("n"),
+        F.coalesce(
+            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
+        ).alias("h"),
+    ).collect()[0]
+    return row["n"], str(row["h"])
+
 def old_cc(edges, max_iter=20, checkpoint_every=3):
     # round-1 loop shape (canonicalize.py@round1): checksum every round
     e = (
@@ -53,7 +63,7 @@ def old_cc(edges, max_iter=20, checkpoint_every=3):
         e = C._small_star(C._large_star(e))
         if (i + 1) % checkpoint_every == 0:
             e = e.localCheckpoint(eager=True)
-        cur = C._checksum(e)
+        cur = checksum(e)
         if cur == prev:
             break
         prev = cur

@@ -29,3 +29,20 @@ def spark():
     spark = get_spark("esmarc-spark-tests", cpus=4, shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture()
+def cc_calls(monkeypatch):
+    """Counts connected-components runs: every CC, public or stored,
+    goes through canonicalize._components."""
+    from esmarc_spark.pipeline import canonicalize
+
+    calls = []
+    real = canonicalize._components
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(canonicalize, "_components", counting)
+    return calls

@@ -421,3 +421,118 @@ def test_run_incremental_corpus_dedup(spark, tmp_path):
         )
     resumed = run(crash_root, crash_state)
     assert resumed == loop
+
+
+ALIAS = "http://alias.example/"
+
+
+def _same_as_edges(spark, merge=False):
+    """sameAs graph over the gazetteer: its uris split into two chains,
+    each ending in an alias uri that sorts below every gazetteer uri, so
+    canonicalization rewrites every linked entity's sameAs object.
+    ``merge`` adds the one edge that joins the two components."""
+    urls = sorted(r[0] for r in gazetteer_df(spark).select("canonical_url").distinct().collect())
+    half = len(urls) // 2
+    edges = []
+    for name, chain in (("one", urls[:half]), ("two", urls[half:])):
+        nodes = [ALIAS + name] + chain
+        edges += list(zip(nodes[1:], nodes))
+    if merge:
+        edges.append((ALIAS + "two", ALIAS + "one"))
+    return spark.createDataFrame(edges, "src string, dst string")
+
+
+def _lineage(spark, root):
+    from esmarc_spark.pipeline.checkpoint import CheckpointStore
+
+    return sorted(tuple(r) for r in CheckpointStore(spark, root).lineage().collect())
+
+
+def test_same_as_batch_loop_and_resume(spark, tmp_path, inputs, cc_calls):
+    """With a sameAs graph: batch and loop stay byte-identical, a killed
+    and resumed run equals the uninterrupted one, and a resume with
+    nothing pending runs no CC and changes nothing."""
+    webtext, gaz = inputs
+    edges = _same_as_edges(spark)
+
+    def run(root, **kw):
+        return run_incremental(spark, webtext, gaz, root, same_as_edges=edges, **kw)
+
+    loop_root = str(tmp_path / "loop")
+    run(loop_root, mode="loop")
+    loop = _read_triples(spark, loop_root)
+    # the graph took effect: sameAs objects moved to the alias uris
+    assert any(p == "sameAs" and o.startswith(ALIAS) for _, p, o, _ in loop)
+    batch_root = str(tmp_path / "batch")
+    run(batch_root, mode="batch")
+    assert _read_triples(spark, batch_root) == loop
+
+    resumed_root = str(tmp_path / "resumed")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run(resumed_root, fail_after_partitions=1)
+    assert run(resumed_root)["skipped_done"]
+    assert _read_triples(spark, resumed_root) == loop
+
+    lineage = _lineage(spark, resumed_root)
+    del cc_calls[:]
+    assert run(resumed_root)["processed"] == []
+    assert cc_calls == []
+    assert _read_triples(spark, resumed_root) == loop
+    assert _lineage(spark, resumed_root) == lineage
+
+
+def test_same_as_map_reused_until_graph_changes(spark, tmp_path, inputs, cc_calls):
+    """A new day with an unchanged graph reads the stored canonical map
+    (no CC); one added edge that merges two components recomputes it,
+    and the new day's triples equal a from-scratch run with the new
+    graph."""
+    from pyspark.sql import functions as F
+
+    webtext, gaz = inputs
+    first_days = webtext.where(
+        F.col("warc_ts") < F.timestamp_seconds(F.lit(1700000000 + 2 * 86400))
+    )
+    edges, merged = _same_as_edges(spark), _same_as_edges(spark, merge=True)
+
+    def scratch(name, graph):
+        root = str(tmp_path / name)
+        run_incremental(spark, webtext, gaz, root, same_as_edges=graph)
+        return _read_triples(spark, root)
+
+    want, want_merged = scratch("want", edges), scratch("want_merged", merged)
+    new_day = max(d for _, _, _, d in want)
+
+    def on_new_day(triples):
+        return {t for t in triples if t[3] == new_day}
+
+    # the merge moves canonical ids on the new day: a stale map would show
+    assert on_new_day(want) != on_new_day(want_merged)
+
+    for name, graph, want_new, n_cc in (
+        ("same", edges, want, 0),
+        ("merged", merged, want_merged, 1),
+    ):
+        root = str(tmp_path / name)
+        run_incremental(spark, first_days, gaz, root, same_as_edges=edges)
+        del cc_calls[:]
+        run_incremental(spark, webtext, gaz, root, same_as_edges=graph)
+        assert len(cc_calls) == n_cc, name
+        assert on_new_day(_read_triples(spark, root)) == on_new_day(want_new), name
+
+
+def test_run_incremental_leaves_nothing_cached(spark, tmp_path, inputs):
+    """A call with a sameAs graph leaves no persisted RDD behind (the
+    canonical map used to stay cached for the rest of the session).
+    CC's localCheckpoint RDDs are not counted: Spark persists them too,
+    but releases them once the JVM collects their plans."""
+    webtext, gaz = inputs
+    edges = _same_as_edges(spark)
+    webtext.count()
+
+    def persisted():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(1 for r in rdds if not r.rdd().isCheckpointed())
+
+    before = persisted()
+    run_incremental(spark, webtext, gaz, str(tmp_path / "r"), same_as_edges=edges)
+    assert persisted() == before
